@@ -16,10 +16,17 @@ actually enforced (df.limit(max_rows + 1) → truncated flag), and full-result
 materialization is bounded by it. At cluster scale the result cap is what
 keeps the driver alive; large exports go through the distributed CSV sink
 (service/export.py) instead.
+
+Repeated statements are served from the registry itself: each query gets
+a reuse key (see ``_reuse_key``), and when a retained COMPLETED result has
+the same key the new query shares its Arrow batches instead of launching a
+Spark job. The retention bound is the only bound on reuse.
 """
 
 from __future__ import annotations
 
+import hashlib
+import re
 import threading
 import uuid
 from typing import Optional
@@ -49,6 +56,43 @@ DEFAULT_MAX_ROWS = 10_000
 DEFAULT_MAX_RETAINED_RESULTS = 64
 DEFAULT_MAX_RETAINED_BYTES = 256 * 1024 * 1024
 
+#: Leaf operators a reusable plan may read. A LogicalRelation is versioned
+#: by its file listing (and must be file-backed); Range and OneRowRelation
+#: are versioned by their own text in the canonical plan. Any other leaf —
+#: LocalRelation, LogicalRDD, DataSourceV2Relation (Iceberg included),
+#: CTE references, command nodes — makes the plan non-reusable.
+_REUSABLE_LEAVES = frozenset({"LogicalRelation", "Range", "OneRowRelation"})
+#: Catalyst tree patterns that make a deterministic plan non-reusable:
+#: time and session-context functions (current_timestamp, current_date,
+#: now, current_user, ...), which Spark marks deterministic; UDFs of every
+#: kind, whose determinism flag is the author's claim; and subquery
+#: expressions, whose plans lie outside ``collectLeaves``.
+_BYPASS_PATTERNS = (
+    "CURRENT_LIKE",
+    "PYTHON_UDF",
+    "SCALA_UDF",
+    "SQL_FUNCTION_EXPRESSION",
+    "SQL_SCALAR_FUNCTION",
+    "SQL_TABLE_FUNCTION",
+    "PLAN_EXPRESSION",
+)
+_FILE_STATUS_RE = re.compile(
+    r"path=(.*?); isDirectory=\w+; length=(\d+);.*?modification_time=(\d+);"
+)
+_JAVA_INT_MAX = 2**31 - 1
+
+
+def _relation_version(relation) -> Optional[tuple]:
+    """(sorted (path, length, mtime) files, options) of a file-backed
+    relation, from its file index's cached listing: one py4j round trip
+    for the whole listing, not one per file. None when the listing does
+    not parse (an index without ``allFiles`` raises instead)."""
+    listing = relation.location().allFiles().toString()
+    files = _FILE_STATUS_RE.findall(listing)
+    if len(files) != listing.count("FileStatus{"):
+        return None
+    return sorted(files), relation.options().toString()
+
 
 class QueryExecutor:
     """One per SparkSession (the reference keeps a process singleton)."""
@@ -75,6 +119,7 @@ class QueryExecutor:
         self.max_retained_bytes = max_retained_bytes
         self._registry: dict[uuid.UUID, QueryResult] = {}
         self._lock = threading.Lock()
+        self._bypass_patterns = None  # JVM Seq of _BYPASS_PATTERNS, built once
 
     # -- reference executor.py:142-154
     def clamp_timeout(self, timeout: Optional[float]) -> float:
@@ -163,6 +208,59 @@ class QueryExecutor:
                         evicted += 1
             self.observer.record_retention(n_terminal, total_bytes, evicted)
 
+    def _reuse_key(self, df: DataFrame, body: str, cap: int) -> Optional[str]:
+        """Digest of everything that determines ``df``'s capped rows, or
+        None when the plan may not be reused.
+
+        The key covers the admitted SQL, the row cap, the output column
+        names (canonicalization erases aliases), the canonicalized
+        analyzed plan (printed without field truncation) and a version
+        per leaf. Commands, non-deterministic plans and plans matching
+        ``_BYPASS_PATTERNS`` or reading other leaves get no key. A few
+        py4j round trips per query and per file-backed leaf; no Spark job.
+        """
+        try:
+            plan = df._jdf.queryExecution().analyzed()
+            if self._bypass_patterns is None:
+                jvm = df._sc._jvm
+                patterns = jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+                self._bypass_patterns = jvm.PythonUtils.toSeq(
+                    [getattr(patterns, p)() for p in _BYPASS_PATTERNS]
+                )
+            if not plan.deterministic() or plan.containsAnyPattern(
+                self._bypass_patterns
+            ):
+                return None
+            leaves = plan.collectLeaves()
+            versions = []
+            for i in range(leaves.size()):
+                leaf = leaves.apply(i)
+                name = leaf.nodeName()
+                if name not in _REUSABLE_LEAVES:
+                    return None
+                if name == "LogicalRelation":
+                    version = _relation_version(leaf.relation())
+                    if version is None:
+                        return None
+                    versions.append(version)
+            canonical = plan.canonicalized().treeString(
+                True, False, _JAVA_INT_MAX, False, False
+            )
+            parts = (body, cap, tuple(df.columns), canonical, tuple(versions))
+        except Exception:
+            return None  # reuse is an optimization: on any doubt, run
+        return hashlib.sha256(repr(parts).encode()).hexdigest()
+
+    def _retained_match(self, key: Optional[str]) -> Optional[QueryResult]:
+        """The newest retained COMPLETED result with reuse key ``key``."""
+        if key is None:
+            return None
+        with self._lock:
+            for r in reversed(self._registry.values()):
+                if r.reuse_key == key and r.status == QueryStatus.COMPLETED:
+                    return r
+        return None
+
     def _execute_inner(
         self, result: QueryResult, body: str, timeout_s: float, cap: int
     ) -> QueryResult:
@@ -176,20 +274,23 @@ class QueryExecutor:
                     group, f"iceberg_explorer_spark query {group}", True
                 )
                 df: DataFrame = self.spark.sql(body)
-                capped = df.limit(cap + 1) if cap else df
-                table = capped.toArrow()
-                if cap and table.num_rows > cap:
-                    table = table.slice(0, cap)
-                    result.metrics.truncated = True
-                try:
-                    from iceberg_explorer_spark.plans.inspect import (
-                        scan_output_rows,
-                    )
+                result.reuse_key = self._reuse_key(df, body, cap)
+                source = self._retained_match(result.reuse_key)
+                if source is None:
+                    capped = df.limit(cap + 1) if cap else df
+                    table = capped.toArrow()
+                    if cap and table.num_rows > cap:
+                        table = table.slice(0, cap)
+                        result.metrics.truncated = True
+                    try:
+                        from iceberg_explorer_spark.plans.inspect import (
+                            scan_output_rows,
+                        )
 
-                    result.metrics.rows_scanned = scan_output_rows(capped)
-                except Exception:
-                    # metrics are best-effort; never fail a query over them
-                    result.metrics.rows_scanned = None
+                        result.metrics.rows_scanned = scan_output_rows(capped)
+                    except Exception:
+                        # metrics are best-effort; never fail a query over them
+                        result.metrics.rows_scanned = None
                 # Attach the result ONLY if the query is still live: after
                 # a timeout/cancel the executor has already marked the
                 # result FAILED/CANCELLED and enforced retention — but
@@ -207,7 +308,11 @@ class QueryExecutor:
                 # to COMPLETED after the client was told the query failed.
                 with self._lock:
                     if result.status == QueryStatus.RUNNING:
-                        result.set_result(table)
+                        if source is None:
+                            result.set_result(table)
+                        else:
+                            result.share_result(source)
+                            self.observer.record_reuse()
                         result.status = QueryStatus.COMPLETED
                     else:
                         # terminal already (timeout/cancel won the race):

@@ -76,11 +76,26 @@ class QueryResult:
     #: row (or the error message was delivered for failed/cancelled
     #: queries, or a 0-row result was fetched at all).
     stream_delivered_final: bool = False
+    #: Digest of what determines this result's rows (SQL, row cap, output
+    #: columns, canonical analyzed plan, leaf versions), or None when the
+    #: plan may not be reused. Set by the executor; a later execute with
+    #: the same key shares this result's batches while it is retained.
+    reuse_key: Optional[str] = None
 
     def set_result(self, table: pa.Table) -> None:
         self._schema = table.schema
         self._batches = table.to_batches(max_chunksize=10_000)
         self.metrics.complete(table.num_rows)
+
+    def share_result(self, source: "QueryResult") -> None:
+        """Take ``source``'s rows without copying them: the Arrow batches
+        are immutable, so both results reference the same buffers. Status,
+        timing and streaming bookkeeping stay this result's own."""
+        self._schema = source._schema
+        self._batches = list(source._batches)
+        self.metrics.truncated = source.metrics.truncated
+        self.metrics.rows_scanned = source.metrics.rows_scanned
+        self.metrics.complete(source.metrics.rows_returned)
 
     @property
     def schema(self) -> Optional[pa.Schema]:

@@ -35,6 +35,11 @@ from typing import Iterator, Optional
 
 logger = logging.getLogger("iceberg_explorer_spark")
 
+#: The Recorder keeps only this many of the most recent spans (and query
+#: durations): one of each is added per query or service call, so an
+#: unbounded list grows for the life of a long-running server.
+MAX_RETAINED_SPANS = 4096
+
 #: Request-scoped correlation id (reference observability.py:104-150 injects
 #: trace/span ids into every structured log line). ContextVar so one id
 #: follows a request across catalog/query/export/health calls — including
@@ -130,10 +135,13 @@ class Recorder:
         self.retained_results: int = 0
         self.retained_result_bytes: int = 0
         self.results_evicted: int = 0
+        # executes served from a retained result's batches (no Spark job);
+        # over the query count it is the reuse ratio
+        self.results_reused: int = 0
 
     def record_duration(self, seconds: float) -> None:
         with self._lock:
-            self.query_duration_seconds.append(seconds)
+            _append_bounded(self.query_duration_seconds, seconds)
 
     def add_rows(self, n: int) -> None:
         with self._lock:
@@ -145,13 +153,17 @@ class Recorder:
 
     def add_span(self, span: SpanRecord) -> None:
         with self._lock:
-            self.spans.append(span)
+            _append_bounded(self.spans, span)
 
     def set_retention(self, count: int, nbytes: int, evicted: int = 0) -> None:
         with self._lock:
             self.retained_results = count
             self.retained_result_bytes = nbytes
             self.results_evicted += evicted
+
+    def count_reuse(self) -> None:
+        with self._lock:
+            self.results_reused += 1
 
     def reset(self) -> None:
         with self._lock:
@@ -162,6 +174,13 @@ class Recorder:
             self.retained_results = 0
             self.retained_result_bytes = 0
             self.results_evicted = 0
+            self.results_reused = 0
+
+
+def _append_bounded(items: list, item) -> None:
+    items.append(item)
+    if len(items) > MAX_RETAINED_SPANS:
+        del items[0]
 
 
 class QueryObserver:
@@ -198,6 +217,11 @@ class QueryObserver:
         reference's three instruments (the OTel mirror of a gauge would
         be an observable callback; the recorder is the contract here)."""
         self.recorder.set_retention(count, nbytes, evicted)
+
+    def record_reuse(self) -> None:
+        """One execute served from a retained result (recorder-backed,
+        like the retention gauges)."""
+        self.recorder.count_reuse()
 
     @contextmanager
     def observe_query(

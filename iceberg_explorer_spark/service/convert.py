@@ -10,6 +10,7 @@ Reference behavior matched exactly:
 from __future__ import annotations
 
 import datetime as dt
+import math
 from typing import Any
 
 import pyarrow as pa
@@ -32,6 +33,10 @@ def json_value(value: Any) -> Any:
     behavior-parity fix, not an extension."""
     if value is None:
         return None
+    if isinstance(value, float):
+        # NaN/±Infinity have no strict-JSON spelling (json.dumps would
+        # write bare NaN/Infinity, which JSON.parse rejects)
+        return value if math.isfinite(value) else None
     if isinstance(value, (dt.datetime, dt.date, dt.time)):
         return value.isoformat()
     if isinstance(value, bytes):

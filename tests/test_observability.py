@@ -127,3 +127,17 @@ def test_request_context_correlates_service_calls(spark):
     # outside any request_context the id is simply absent, never stale
     svc.list_namespaces()
     assert rec.spans[-1].request_id is None
+
+
+def test_recorder_keeps_only_recent_spans():
+    from iceberg_explorer_spark.observability import MAX_RETAINED_SPANS, SpanRecord
+
+    rec = Recorder()
+    for i in range(MAX_RETAINED_SPANS + 10):
+        rec.add_span(SpanRecord(name="s", query_id=str(i)))
+        rec.record_duration(float(i))
+    assert isinstance(rec.spans, list)
+    assert len(rec.spans) == MAX_RETAINED_SPANS
+    assert rec.spans[0].query_id == "10"
+    assert rec.spans[-1].query_id == str(MAX_RETAINED_SPANS + 9)
+    assert len(rec.query_duration_seconds) == MAX_RETAINED_SPANS

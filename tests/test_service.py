@@ -477,3 +477,21 @@ def test_pagination_slice_equivalence(n_rows, offset, page_size, batch_split):
     assert msgs[0]["type"] == "metadata" and msgs[0]["total_rows"] == n_rows
     assert msgs[-1]["type"] == "complete"
     assert msgs[-1]["rows_returned"] == len(want)
+
+
+def test_non_finite_doubles_stream_as_strict_json_null(spark):
+    """json.dumps writes bare NaN/Infinity, which a browser's JSON.parse
+    rejects: non-finite doubles go out as null."""
+    from iceberg_explorer_spark.lifecycle.executor import QueryExecutor
+
+    res = QueryExecutor(spark).execute(
+        "SELECT CAST('NaN' AS DOUBLE) AS n, CAST('Infinity' AS DOUBLE) AS p, "
+        "CAST('-Infinity' AS DOUBLE) AS m, 1.5D AS f"
+    )
+
+    def reject(token):
+        raise ValueError(f"non-strict JSON constant {token}")
+
+    lines = [json.loads(l, parse_constant=reject) for l in stream_results(res)]
+    data = [m for m in lines if m["type"] == "data"]
+    assert data[0]["rows"] == [[None, None, None, 1.5]]
